@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import clean_symmetric, vertices_from_edges
-from giraph_spark.pregel import run_supersteps
+from giraph_spark.pregel import lineage_cut, run_supersteps
 
 
 @dataclass
@@ -115,8 +115,9 @@ def densest_subgraph(
             .cast("int")
             .alias("removal_round"),
         )
-        # materialize the new state before dropping the scored cache
-        stats_row = new_state.persist().agg(
+        # lazy cut: this aggregate writes it before the scored cache drops
+        new_state = lineage_cut(new_state, eager=False).df
+        stats_row = new_state.agg(
             F.count(F.when(F.col("removal_round").isNull(), 1)).alias("alive")
         ).collect()[0]
         scored.unpersist()

@@ -29,11 +29,13 @@ Spark shape per superstep (same scale discipline as pagerank.py):
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import dedup_edges, vertices_from_edges
-from giraph_spark.pregel import PregelRun, gather_messages, run_supersteps
+from giraph_spark.pregel import PregelRun, gather_messages, lineage_cut, run_supersteps
 
 
 def hits(
@@ -75,19 +77,11 @@ def hits(
         "id", F.lit(init).alias("auth"), F.lit(init).alias("hub")
     ).repartition(num_partitions, "id")
 
-    # the step's joined intermediate is cached so the norm aggregate and
-    # the state materialization share one execution; released one
-    # superstep later (after the engine's lineage cut detaches the state)
-    box: dict[str, DataFrame | None] = {"prev_raw": None}
-
-    def _release_prev() -> None:
-        prev = box["prev_raw"]
-        if prev is not None:
-            prev.unpersist()
-            box["prev_raw"] = None
-
+    # the step's joined intermediate is lazily cut, so the norm aggregate
+    # writes it and the normalized state is a projection of that cut:
+    # one job per superstep (the loop keeps the cut and frees it once
+    # superseded)
     def step(vertices: DataFrame, superstep: int):
-        _release_prev()
         a_msgs = e_fwd.join(
             vertices.select(F.col("id").alias("src"), "hub").hint("shuffle_hash"),
             "src",
@@ -112,7 +106,8 @@ def hits(
             .withColumnRenamed("src", "id")
             .withColumnRenamed("msg", "h_raw")
         )
-        raw = (
+        # lazy cut: the aggregate below writes it in the superstep's one job
+        raw = lineage_cut(
             full.join(h_raw.hint("shuffle_hash"), "id", "left")
             .select(
                 "id",
@@ -120,10 +115,9 @@ def hits(
                 "hub",
                 "a_raw",
                 F.coalesce("h_raw", F.lit(0.0)).alias("h_raw"),
-            )
-            .persist()
-        )
-        box["prev_raw"] = raw
+            ),
+            eager=False,
+        ).df
         # ONE action: both squared norms + dot products with the previous
         # unit vectors (cos = dot/norm because ‖old‖ = 1)
         norms = raw.agg(
@@ -156,15 +150,9 @@ def hits(
         halt=halt,
         verbose=verbose,
     )
-    _release_prev()
     e_fwd.unpersist()
     e_rev.unpersist()
-    return PregelRun(
-        vertices=run.vertices.select("id", "auth", "hub"),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=run.vertices.select("id", "auth", "hub"))
 
 
 def eigenvector_centrality(
@@ -206,21 +194,13 @@ def eigenvector_centrality(
     state = verts.select("id", F.lit(init).alias("score")).repartition(
         num_partitions, "id"
     )
-    box: dict[str, DataFrame | None] = {"prev_raw": None}
-
-    def _release_prev() -> None:
-        prev = box["prev_raw"]
-        if prev is not None:
-            prev.unpersist()
-            box["prev_raw"] = None
-
     def step(vertices: DataFrame, superstep: int):
-        _release_prev()
         msgs = e_fwd.join(
             vertices.select(F.col("id").alias("src"), "score").hint("shuffle_hash"),
             "src",
         ).select("dst", F.col("score").alias("msg"))
-        raw = (
+        # lazy cut: the aggregate below writes it in the superstep's one job
+        raw = lineage_cut(
             vertices.join(
                 gather_messages(msgs, [("msg", "sum")], key="dst", salt=salt)
                 .withColumnRenamed("dst", "id")
@@ -228,10 +208,9 @@ def eigenvector_centrality(
                 "id",
                 "left",
             )
-            .select("id", "score", F.coalesce("msg", F.lit(0.0)).alias("raw"))
-            .persist()
-        )
-        box["prev_raw"] = raw
+            .select("id", "score", F.coalesce("msg", F.lit(0.0)).alias("raw")),
+            eager=False,
+        ).df
         norms = raw.agg(
             F.sum(F.col("raw") * F.col("raw")).alias("n2"),
             F.sum(F.col("raw") * F.col("score")).alias("dot"),
@@ -255,14 +234,8 @@ def eigenvector_centrality(
         halt=halt,
         verbose=verbose,
     )
-    _release_prev()
     e_fwd.unpersist()
-    return PregelRun(
-        vertices=run.vertices.select("id", "score"),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=run.vertices.select("id", "score"))
 
 
 def salsa(
@@ -322,16 +295,7 @@ def salsa(
         "id", F.lit(init).alias("auth"), F.lit(init).alias("hub")
     ).repartition(num_partitions, "id")
 
-    box: dict[str, DataFrame | None] = {"prev_raw": None}
-
-    def _release_prev() -> None:
-        prev = box["prev_raw"]
-        if prev is not None:
-            prev.unpersist()
-            box["prev_raw"] = None
-
     def step(vertices: DataFrame, superstep: int):
-        _release_prev()
         a_msgs = e_fwd.join(
             vertices.select(F.col("id").alias("src"), "hub").hint("shuffle_hash"),
             "src",
@@ -353,15 +317,15 @@ def salsa(
             .withColumnRenamed("src", "id")
             .withColumnRenamed("msg", "h_raw")
         )
-        raw = (
+        # lazy cut: the aggregate below writes it in the superstep's one job
+        raw = lineage_cut(
             full.join(h_raw.hint("shuffle_hash"), "id", "left")
             .select(
                 "id", "auth", "hub", "a_raw",
                 F.coalesce("h_raw", F.lit(0.0)).alias("h_raw"),
-            )
-            .persist()
-        )
-        box["prev_raw"] = raw
+            ),
+            eager=False,
+        ).df
         # ONE action: both L1 masses + L1 movement vs the previous vectors
         sums = raw.agg(
             F.sum("a_raw").alias("sa"),
@@ -387,15 +351,9 @@ def salsa(
         spark, state, step,
         max_supersteps=max_supersteps, halt=halt, verbose=verbose,
     )
-    _release_prev()
     e_fwd.unpersist()
     e_rev.unpersist()
-    return PregelRun(
-        vertices=run.vertices.select("id", "auth", "hub"),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=run.vertices.select("id", "auth", "hub"))
 
 
 def katz_centrality(
@@ -439,21 +397,13 @@ def katz_centrality(
     state = verts.select("id", F.lit(float(beta)).alias("katz")).repartition(
         num_partitions, "id"
     )
-    box: dict[str, DataFrame | None] = {"prev": None}
-
-    def _release_prev() -> None:
-        prev = box["prev"]
-        if prev is not None:
-            prev.unpersist()
-            box["prev"] = None
-
     def step(vertices: DataFrame, superstep: int):
-        _release_prev()
         msgs = e_fwd.join(
             vertices.select(F.col("id").alias("src"), "katz").hint("shuffle_hash"),
             "src",
         ).select("dst", F.col("katz").alias("msg"))
-        new = (
+        # lazy cut: the aggregate below writes it in the superstep's one job
+        new = lineage_cut(
             vertices.join(
                 gather_messages(msgs, [("msg", "sum")], key="dst", salt=salt)
                 .withColumnRenamed("dst", "id")
@@ -468,10 +418,9 @@ def katz_centrality(
                     F.lit(float(beta))
                     + F.lit(float(alpha)) * F.coalesce("msg", F.lit(0.0))
                 ).alias("new_katz"),
-            )
-            .persist()
-        )
-        box["prev"] = new
+            ),
+            eager=False,
+        ).df
         delta = float(
             new.agg(
                 F.sum(F.abs(F.col("new_katz") - F.col("katz"))).alias("d")
@@ -491,11 +440,5 @@ def katz_centrality(
         spark, state, step,
         max_supersteps=max_supersteps, halt=halt, verbose=verbose,
     )
-    _release_prev()
     e_fwd.unpersist()
-    return PregelRun(
-        vertices=run.vertices.select("id", "katz"),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=run.vertices.select("id", "katz"))

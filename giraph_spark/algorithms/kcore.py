@@ -466,12 +466,7 @@ def _trussness_peel(
             tris.select(F.least("b", "c").alias("u"), F.greatest("b", "c").alias("v"))
         )
     )
-    from giraph_spark.pregel import (
-        _checkpointed_jrdd,
-        _gated_release,
-        bare_checkpoint,
-        flush_releases,
-    )
+    from giraph_spark.pregel import bare_checkpoint, flush_releases, lineage_cut
 
     sup, sup_release = bare_checkpoint(
         sym.where(F.col("src") < F.col("dst"))
@@ -533,7 +528,7 @@ def _trussness_peel(
         orient.count()
     cuts.release("sym")  # only the initial orientation needed it
     parts: list[DataFrame] = []  # per-round removed frontiers, already cut
-    part_handles: list[object] = []
+    part_cuts = []  # their Cuts, released once the result is assembled
     # one-round release deferral: sup_{r-1}'s blocks are freed only after
     # round r's state is materialized, so even a straggling task attempt
     # from round r-1 (task kill is cooperative — a cancelled attempt can
@@ -570,11 +565,13 @@ def _trussness_peel(
                 # materialized below
             _t0 = time.time()
             # lazy cut + ONE agg that both materializes the frontier's
-            # checkpoint blocks and counts total + support>0 rows (the
-            # step_precut idiom — saves the separate eager-cut job)
-            removed = sup.where(F.col("support") < k - 2).select(
-                "u", "v", "support"
-            ).localCheckpoint(eager=False)
+            # checkpoint blocks and counts total + support>0 rows (saves a
+            # separate eager-cut job)
+            rm_cut = lineage_cut(
+                sup.where(F.col("support") < k - 2).select("u", "v", "support"),
+                eager=False,
+            )
+            removed = rm_cut.df
             row = removed.agg(
                 F.count(F.lit(1)).alias("n_rm"),
                 F.sum(
@@ -583,17 +580,16 @@ def _trussness_peel(
             ).collect()[0]
             n_rm = int(row["n_rm"])
             n_fr = int(row["n_fr"] or 0)
-            rm_handle = _checkpointed_jrdd(removed)
             _t1 = time.time()
             if n_rm == 0:
-                _gated_release(spark.sparkContext, rm_handle)
+                rm_cut.release()
                 break
             parts.append(
                 removed.select(
                     "u", "v", F.lit(k - 1).cast("long").alias("trussness")
                 )
             )
-            part_handles.append(rm_handle)
+            part_cuts.append(rm_cut)
             rm_pairs = removed.select("u", "v")
             rm_anti = F.broadcast(rm_pairs) if n_rm <= broadcast_frontier_max else rm_pairs
             if n_fr == 0:
@@ -687,8 +683,8 @@ def _trussness_peel(
         for p in parts[1:]:
             acc = acc.union(p)
         out = acc.coalesce(num_partitions).localCheckpoint(eager=True)
-    for h in part_handles:
-        _gated_release(spark.sparkContext, h)
+    for c in part_cuts:
+        c.release()
     if deferred_release is not None:
         deferred_release()
     if sup_release is not None:

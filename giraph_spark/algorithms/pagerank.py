@@ -28,13 +28,20 @@ per-superstep aggregator gather of master/MasterCompute.java:41-47).
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import normalize_edge_weights, out_degrees, vertices_from_edges
-from giraph_spark.pregel import PregelRun, gather_messages, run_supersteps
+from giraph_spark.pregel import (
+    PregelRun,
+    gather_messages,
+    lineage_cut,
+    run_supersteps,
+    sql_supersteps,
+)
 
 
 def pagerank(
@@ -71,11 +78,8 @@ def pagerank(
     """
     if convergence not in ("l1", "l1_mean", "linf", "rmse"):
         raise ValueError(f"unknown convergence type {convergence!r}")
-    # the superstep runs as spark.sql over temp views, so the views and
-    # the SQL must resolve in the SAME session: inside foreachBatch the
-    # frames belong to a CLONED session whose temp-view catalog is
-    # isolated from the outer session's — always work in the session
-    # that owns the edge frame (identical to `spark` everywhere else)
+    # the SQL supersteps resolve temp views in the session that owns the
+    # edge frame (a cloned one inside foreachBatch; see sql_supersteps)
     spark = edges.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -150,29 +154,18 @@ def pagerank(
     d = float(damping)
     # aggregator state visible to the *next* superstep (one-superstep lag,
     # master/MasterCompute.java:41-47). On resume the loop starts from a
-    # snapshot this setup never saw, so the box must fall back to the
-    # lazy in-loop _sums; otherwise it is fully initialized here.
+    # snapshot this setup never saw, so the box is filled from that
+    # state by the first superstep; otherwise it is fully initialized here.
     box: dict[str, float] = {
         "all_sum": float(n_vertices),
         "sink_sum": None if resume else init_sink_sum,
     }  # type: ignore[assignment]
+    sums = (
+        "sum(rank) AS all_sum, "
+        "sum(CASE WHEN is_sink THEN rank ELSE 0.0 END) AS sink_sum"
+    )
 
-    def _sums(df: DataFrame) -> tuple[float, float]:
-        r = df.agg(
-            F.sum("rank").alias("all_sum"),
-            F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(F.lit(0.0))).alias(
-                "sink_sum"
-            ),
-        ).collect()[0]
-        return float(r["all_sum"]), float(r["sink_sum"] or 0.0)
-
-    # The step is issued as ONE spark.sql() text per superstep instead of
-    # ~a dozen DataFrame-API calls: each Column/DataFrame builder is its
-    # own py4j round trip, measured ~117 ms of the ~430 ms sf0.1
-    # superstep floor; a SQL string ships the whole plan in one call and
-    # parses/analyzes JVM-side (measured 442 -> 335 ms/superstep, ranks
-    # identical to 1e-10 — FP reorder noise only). Join strategy hints
-    # match the DataFrame formulation exactly:
+    # Join strategy hints match the DataFrame formulation exactly:
     # - SHUFFLE_HASH(v) on the scatter join: sort-merge would re-sort the
     #   (static, cached, already src-partitioned) edge table every
     #   superstep; hash-building the much smaller per-superstep rank
@@ -181,62 +174,38 @@ def pagerank(
     #   probe the co-partitioned state.
     # The salted variant reproduces gather_messages' retry-safe two-level
     # reduction (content-hashed salt, pregel.py:104-114) in SQL.
-    import uuid
-
-    uid = uuid.uuid4().hex[:8]
-    ev, sv, nv = f"pr_edges_{uid}", f"pr_state_{uid}", f"pr_new_{uid}"
-    e.createOrReplaceTempView(ev)
-    if salt and salt > 1:
-        gather_cte = f"""m AS (
+    def step_sql(view, superstep: int) -> str:
+        if box["sink_sum"] is None:  # resume from a snapshot this setup never saw
+            r = spark.sql(f"SELECT {sums} FROM {view('state')}").collect()[0]
+            box["all_sum"], box["sink_sum"] = float(r["all_sum"]), float(r["sink_sum"] or 0.0)
+        base = d * box["sink_sum"] / n_vertices + (1.0 - d) * box["all_sum"] / n_vertices
+        if salt and salt > 1:
+            gather_cte = f"""m AS (
         SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, v.rank * e.weight AS msg
-        FROM {ev} e JOIN {sv} v ON e.src = v.id
+        FROM {view('edges')} e JOIN {view('state')} v ON e.src = v.id
       ),
       s1 AS (
         SELECT dst, sum(msg) AS msg
         FROM m GROUP BY dst, pmod(xxhash64(dst, msg), {int(salt)})
       ),
       g AS (SELECT dst, sum(msg) AS msg FROM s1 GROUP BY dst)"""
-    else:
-        gather_cte = f"""g AS (
+        else:
+            gather_cte = f"""g AS (
         SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, sum(v.rank * e.weight) AS msg
-        FROM {ev} e JOIN {sv} v ON e.src = v.id
+        FROM {view('edges')} e JOIN {view('state')} v ON e.src = v.id
         GROUP BY e.dst
       )"""
-    step_sql = (
-        "WITH " + gather_cte + f"""
+        return f"""WITH {gather_cte}
       SELECT /*+ SHUFFLE_HASH(g) */ v.id,
-             {{d}} * coalesce(g.msg, 0.0) + {{base}} AS rank,
+             {d!r} * coalesce(g.msg, 0.0) + {base!r} AS rank,
              v.is_sink,
-             {{d}} * coalesce(g.msg, 0.0) + {{base}} - v.rank AS _delta
-      FROM {sv} v LEFT JOIN g ON v.id = g.dst"""
-    )
-    agg_sql = f"""
-      SELECT sum(rank) AS all_sum,
-             sum(CASE WHEN is_sink THEN rank ELSE 0.0 END) AS sink_sum,
-             sum(abs(_delta)) AS l1,
-             max(abs(_delta)) AS linf,
-             sqrt(avg(_delta * _delta)) AS rmse
-      FROM {nv}"""
+             {d!r} * coalesce(g.msg, 0.0) + {base!r} - v.rank AS _delta
+      FROM {view('state')} v LEFT JOIN g ON v.id = g.dst"""
 
-    def step(vertices: DataFrame, superstep: int) -> tuple[DataFrame, dict[str, Any]]:
-        if box["sink_sum"] is None:  # resume from a snapshot this setup never saw
-            box["all_sum"], box["sink_sum"] = _sums(vertices)
-        all_sum, sink_sum = box["all_sum"], box["sink_sum"]
-        base = d * sink_sum / n_vertices + (1.0 - d) * all_sum / n_vertices
-
-        vertices.createOrReplaceTempView(sv)
-        new_state = spark.sql(step_sql.format(d=repr(d), base=repr(base)))
-        # LAZY lineage cut BEFORE the action: the convergence aggregate
-        # below materializes the checkpoint blocks in ITS job, so the
-        # superstep costs exactly one Spark job (the loop's step_precut
-        # mode skips the separate eager-cut job — measured ~120 ms of
-        # the sf0.1 superstep floor)
-        new_state = new_state.localCheckpoint(eager=False)
-        new_state.createOrReplaceTempView(nv)
-        # ONE action: next-iteration sums + all convergence reducers
-        row = spark.sql(agg_sql).collect()[0]
+    def stats(row) -> dict[str, Any]:
+        # next-iteration sums + all convergence reducers, from ONE action
         box["all_sum"], box["sink_sum"] = float(row["all_sum"]), float(row["sink_sum"] or 0.0)
-        stats = {
+        return {
             "all_sum": box["all_sum"],
             "sink_sum": box["sink_sum"],
             "l1": float(row["l1"]),
@@ -244,42 +213,27 @@ def pagerank(
             "linf": float(row["linf"]),
             "rmse": float(row["rmse"]),
         }
-        return new_state, stats
 
     halt = None
     if tolerance is not None:
         halt = lambda stats, i: stats[convergence] < tolerance  # noqa: E731
 
-    try:
-        run = run_supersteps(
-            spark,
-            state,
-            step,
-            max_supersteps=max_supersteps,
-            halt=halt,
-            checkpoint_dir=checkpoint_dir,
-            checkpoint_interval=checkpoint_interval,
-            resume=resume,
-            verbose=verbose,
-            # precut mode cuts lineage every superstep by construction
-            # (the step pre-issues a lazy localCheckpoint its own
-            # convergence aggregate materializes), so there is no
-            # cut-interval knob here
-            step_precut=True,
-        )
-    finally:
-        for view in (ev, sv, nv):
-            try:
-                spark.catalog.dropTempView(view)
-            except Exception:  # noqa: BLE001 — view may never have been created
-                pass
-    e.unpersist()
-    return PregelRun(
-        vertices=run.vertices.select("id", "rank"),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
+    run = sql_supersteps(
+        spark,
+        state,
+        {"edges": e},
+        step_sql,
+        sums + ", sum(abs(_delta)) AS l1, max(abs(_delta)) AS linf, "
+        "sqrt(avg(_delta * _delta)) AS rmse",
+        stats,
+        halt=halt,
+        max_supersteps=max_supersteps,
+        checkpoint_dir=checkpoint_dir,
+        checkpoint_interval=checkpoint_interval,
+        resume=resume,
+        verbose=verbose,
     )
+    return replace(run, vertices=run.vertices.select("id", "rank"))
 
 
 def pagerank_random_walk(
@@ -363,20 +317,20 @@ def pagerank_random_walk(
         raw = (
             F.lit(1.0 - t) * F.coalesce(F.col("msg"), F.lit(0.0)) + F.lit(base)
         ) / F.lit(cum)
-        new_state = (
+        # lazy cut: the aggregate below writes it in the superstep's one job
+        new_state = lineage_cut(
             vertices.join(
                 gathered.withColumnRenamed("dst", "id").hint("shuffle_hash"),
                 "id",
                 "left",
-            )
-            .select(
+            ).select(
                 "id",
                 raw.alias("rank"),
                 "is_sink",
                 (raw - F.col("rank")).alias("_delta"),
-            )
-            .persist()
-        )
+            ),
+            eager=False,
+        ).df
         row = new_state.agg(
             F.sum("rank").alias("c"),
             F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(0.0)).alias("d"),
@@ -393,9 +347,4 @@ def pagerank_random_walk(
         verbose=verbose,
     )
     e.unpersist()
-    return PregelRun(
-        vertices=run.vertices.select("id", "rank"),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=run.vertices.select("id", "rank"))

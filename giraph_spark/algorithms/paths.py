@@ -14,6 +14,7 @@ improved scatter next superstep (send-on-change = the active set).
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,6 +24,7 @@ from giraph_spark.graph import vertices_from_edges
 from giraph_spark.pregel import (
     PregelRun,
     gather_messages,
+    lineage_cut,
     materialize_count,
     run_supersteps,
 )
@@ -99,19 +101,18 @@ def sssp(
             "dst", (F.col("distance") + F.col("w")).alias("msg")
         )
         gathered = gather_messages(msgs, [("msg", "min")], key="dst")
-        new_state = (
+        new_state = lineage_cut(
             vertices.join(
                 gathered.withColumnRenamed("dst", "id").hint("shuffle_hash"),
                 "id",
                 "left",
-            )
-            .select(
+            ).select(
                 "id",
                 F.least("distance", F.coalesce("msg", "distance")).alias("distance"),
                 (F.coalesce("msg", "distance") < F.col("distance")).alias("changed"),
-            )
-            .persist()
-        )
+            ),
+            eager=False,
+        ).df
         return new_state, {"changed": materialize_count(new_state, "changed")}
 
     run = run_supersteps(
@@ -123,12 +124,7 @@ def sssp(
         verbose=verbose,
     )
     e.unpersist()
-    return PregelRun(
-        vertices=run.vertices.select("id", "distance"),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=run.vertices.select("id", "distance"))
 
 
 def bfs(
@@ -156,12 +152,7 @@ def bfs(
         .otherwise(F.col("distance").cast("long"))
         .alias("hops"),
     )
-    return PregelRun(
-        vertices=hops,
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=hops)
 
 
 def multi_seed_distances(
@@ -208,20 +199,19 @@ def multi_seed_distances(
         )
         # min-combined per (seed, dst): the composite-key gather
         gathered = msgs.groupBy("seed", "dst").agg(F.min("msg").alias("msg"))
-        new_state = (
+        new_state = lineage_cut(
             vertices.join(
                 gathered.withColumnRenamed("dst", "id").hint("shuffle_hash"),
                 ["seed", "id"],
                 "full_outer",
-            )
-            .select(
+            ).select(
                 "seed",
                 "id",
                 F.coalesce("dist", "msg").alias("dist"),
                 F.col("dist").isNull().alias("changed"),  # newly reached pair
-            )
-            .persist()
-        )
+            ),
+            eager=False,
+        ).df
         return new_state, {"changed": materialize_count(new_state, "changed")}
 
     run = run_supersteps(
@@ -233,12 +223,7 @@ def multi_seed_distances(
         verbose=verbose,
     )
     e.unpersist()
-    return PregelRun(
-        vertices=run.vertices.select("seed", "id", "dist"),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=run.vertices.select("seed", "id", "dist"))
 
 
 def harmonic_centrality(
@@ -277,12 +262,7 @@ def harmonic_centrality(
             F.coalesce("n_reached", F.lit(0)).cast("long").alias("n_reached"),
         )
     )
-    return PregelRun(
-        vertices=out,
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=out)
 
 
 def eccentricity(
@@ -310,12 +290,7 @@ def eccentricity(
         .cast("long")
         .alias("n_reached"),
     )
-    return PregelRun(
-        vertices=out,
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=out)
 
 
 def closeness_centrality(
@@ -349,12 +324,7 @@ def closeness_centrality(
     out = all_seeds.join(out, "seed", "left").select(
         "seed", "closeness", F.coalesce("n_reached", F.lit(0)).alias("n_reached")
     )
-    return PregelRun(
-        vertices=out,
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=out)
 
 
 def pointer_jump(

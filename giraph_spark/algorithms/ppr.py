@@ -13,13 +13,14 @@ update join + one driver aggregate); only the teleport target differs.
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import out_degrees, vertices_from_edges
-from giraph_spark.pregel import PregelRun, gather_messages, run_supersteps
+from giraph_spark.pregel import PregelRun, gather_messages, lineage_cut, run_supersteps
 
 
 def personalized_pagerank(
@@ -108,7 +109,8 @@ def personalized_pagerank(
         new_rank = (
             F.lit(1.0 - t) * F.coalesce(F.col("msg"), F.lit(0.0)) + restart
         )
-        new_state = (
+        # lazy cut: the aggregate below writes it in the superstep's one job
+        new_state = lineage_cut(
             vertices.join(
                 gathered.withColumnRenamed("dst", "id").hint("shuffle_hash"),
                 "id",
@@ -120,9 +122,9 @@ def personalized_pagerank(
                 "is_sink",
                 "is_source",
                 (new_rank - F.col("rank")).alias("_delta"),
-            )
-            .persist()
-        )
+            ),
+            eager=False,
+        ).df
         row = new_state.agg(
             F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(F.lit(0.0))).alias("s"),
             F.sum(F.abs(F.col("_delta"))).alias("l1"),
@@ -138,12 +140,7 @@ def personalized_pagerank(
         spark, state, step, max_supersteps=max_supersteps, halt=halt, verbose=verbose
     )
     e.unpersist()
-    return PregelRun(
-        vertices=run.vertices.select("id", "rank"),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=run.vertices.select("id", "rank"))
 
 
 def trustrank(
@@ -173,12 +170,7 @@ def trustrank(
         max_supersteps=max_supersteps, tolerance=tolerance, salt=salt,
         num_partitions=num_partitions, weighted=weighted, verbose=verbose,
     )
-    return PregelRun(
-        vertices=run.vertices.select("id", F.col("rank").alias("trust")),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=run.vertices.select("id", F.col("rank").alias("trust")))
 
 
 def ppr_batch(
@@ -269,7 +261,8 @@ def ppr_batch(
             F.lit(t) + F.lit(1.0 - t) * F.element_at(sink_expr, F.col("seed")),
         ).otherwise(F.lit(0.0))
         new_rank = F.lit(1.0 - t) * F.coalesce(F.col("msg"), F.lit(0.0)) + restart
-        new_state = (
+        # lazy cut: the aggregate below writes it in the superstep's one job
+        new_state = lineage_cut(
             vertices.join(
                 gathered.withColumnRenamed("dst", "id").hint("shuffle_hash"),
                 ["seed", "id"],
@@ -281,9 +274,9 @@ def ppr_batch(
                 new_rank.alias("rank"),
                 "is_sink",
                 (new_rank - F.col("rank")).alias("_delta"),
-            )
-            .persist()
-        )
+            ),
+            eager=False,
+        ).df
         rows = new_state.groupBy("seed").agg(
             F.sum(F.when(F.col("is_sink"), F.col("rank")).otherwise(F.lit(0.0))).alias("s"),
             F.sum(F.abs(F.col("_delta"))).alias("l1"),
@@ -302,12 +295,7 @@ def ppr_batch(
         spark, state, step, max_supersteps=max_supersteps, halt=halt, verbose=verbose
     )
     e.unpersist()
-    return PregelRun(
-        vertices=run.vertices.select("seed", "id", "rank"),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
-    )
+    return replace(run, vertices=run.vertices.select("seed", "id", "rank"))
 
 
 def local_community(

@@ -23,13 +23,14 @@ graph — the relational form of voteToHalt/wake-on-message
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giraph_spark.graph import symmetrize, vertices_from_edges
-from giraph_spark.pregel import PregelRun, run_supersteps
+from giraph_spark.pregel import LineageCuts, PregelRun, sql_supersteps
 
 
 def connected_components(
@@ -61,11 +62,8 @@ def connected_components(
     supersteps instead of O(diameter of the graph). Edge REMOVALS can
     split components and make old labels stale ids: recompute cold.
     """
-    # the superstep runs as spark.sql over temp views, so the views and
-    # the SQL must resolve in the SAME session: inside foreachBatch the
-    # frames belong to a CLONED session whose temp-view catalog is
-    # isolated from the outer session's — always work in the session
-    # that owns the edge frame (identical to `spark` everywhere else)
+    # the SQL supersteps resolve temp views in the session that owns the
+    # edge frame (a cloned one inside foreachBatch; see sql_supersteps)
     spark = edges.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -97,22 +95,15 @@ def connected_components(
             )
         )
 
-    # ONE spark.sql() text per superstep instead of ~ten DataFrame-API
-    # py4j round trips — same rationale and measurement as the PageRank
-    # step (pagerank.py: ~117 ms/superstep of pure plan-building py4j).
     # SHUFFLE_HASH(v): stream the static cached edge table, hash-build
     # the shrinking changed-frontier — sort-merge would re-sort the
     # edges each round. The salted variant is gather_messages' retry-
     # safe content-hashed two-level min (pregel.py:104-114) in SQL.
-    import uuid
-
-    uid = uuid.uuid4().hex[:8]
-    ev, sv, nv = f"wcc_edges_{uid}", f"wcc_state_{uid}", f"wcc_new_{uid}"
-    e.createOrReplaceTempView(ev)
-    if salt and salt > 1:
-        gather_cte = f"""m AS (
+    def step_sql(view, superstep: int) -> str:
+        if salt and salt > 1:
+            gather_cte = f"""m AS (
         SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, v.component AS msg
-        FROM {ev} e JOIN {sv} v ON e.src = v.id
+        FROM {view('edges')} e JOIN {view('state')} v ON e.src = v.id
         WHERE v.changed
       ),
       s1 AS (
@@ -120,57 +111,34 @@ def connected_components(
         FROM m GROUP BY dst, pmod(xxhash64(dst, msg), {int(salt)})
       ),
       g AS (SELECT dst, min(msg) AS msg FROM s1 GROUP BY dst)"""
-    else:
-        gather_cte = f"""g AS (
+        else:
+            gather_cte = f"""g AS (
         SELECT /*+ SHUFFLE_HASH(v) */ e.dst AS dst, min(v.component) AS msg
-        FROM {ev} e JOIN {sv} v ON e.src = v.id
+        FROM {view('edges')} e JOIN {view('state')} v ON e.src = v.id
         WHERE v.changed
         GROUP BY e.dst
       )"""
-    step_sql = (
-        "WITH " + gather_cte + f"""
+        return f"""WITH {gather_cte}
       SELECT /*+ SHUFFLE_HASH(g) */ v.id,
              least(v.component, coalesce(g.msg, v.component)) AS component,
              (coalesce(g.msg, v.component) < v.component) AS changed
-      FROM {sv} v LEFT JOIN g ON v.id = g.dst"""
-    )
-    count_sql = f"SELECT sum(CASE WHEN changed THEN 1 ELSE 0 END) AS c FROM {nv}"
+      FROM {view('state')} v LEFT JOIN g ON v.id = g.dst"""
 
-    def step(vertices: DataFrame, superstep: int) -> tuple[DataFrame, dict[str, Any]]:
-        vertices.createOrReplaceTempView(sv)
-        # lazy cut: the frontier-count action below writes the checkpoint
-        # blocks in the same job (step_precut mode)
-        new_state = spark.sql(step_sql).localCheckpoint(eager=False)
-        new_state.createOrReplaceTempView(nv)
-        row = spark.sql(count_sql).collect()[0]
-        return new_state, {"changed": int(row["c"] or 0)}
-
-    try:
-        run = run_supersteps(
-            spark,
-            state,
-            step,
-            max_supersteps=max_supersteps,
-            halt=lambda stats, i: stats["changed"] == 0,
-            checkpoint_dir=checkpoint_dir,
-            checkpoint_interval=checkpoint_interval,
-            resume=resume,
-            verbose=verbose,
-            step_precut=True,
-        )
-    finally:
-        for view in (ev, sv, nv):
-            try:
-                spark.catalog.dropTempView(view)
-            except Exception:  # noqa: BLE001 — view may never have been created
-                pass
-    e.unpersist()
-    return PregelRun(
-        vertices=run.vertices.select("id", "component"),
-        supersteps=run.supersteps,
-        converged=run.converged,
-        history=run.history,
+    run = sql_supersteps(
+        spark,
+        state,
+        {"edges": e},
+        step_sql,
+        "sum(CASE WHEN changed THEN 1 ELSE 0 END) AS c",
+        lambda row: {"changed": int(row["c"] or 0)},
+        halt=lambda stats, _i: stats["changed"] == 0,
+        max_supersteps=max_supersteps,
+        checkpoint_dir=checkpoint_dir,
+        checkpoint_interval=checkpoint_interval,
+        resume=resume,
+        verbose=verbose,
     )
+    return replace(run, vertices=run.vertices.select("id", "component"))
 
 
 def component_sizes(labels: DataFrame) -> DataFrame:
@@ -214,11 +182,9 @@ def connected_components_star(
     convergence probe rides the same aggregate (count + hash-sum of the
     pair set) so a round costs exactly one action.
     """
-    from giraph_spark.pregel import LineageCuts as _Cuts
-
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cuts = _Cuts()
+    cuts = LineageCuts()
 
     verts = vertices_from_edges(edges).persist()
 

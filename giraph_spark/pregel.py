@@ -33,7 +33,10 @@ fan-in on mega-hubs.
 
 from __future__ import annotations
 
+import threading
 import time
+import uuid
+import weakref
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
@@ -192,10 +195,11 @@ def scatter_messages(
 
 
 def materialize_count(df: DataFrame, pred_col: str) -> int:
-    """ONE action that both materializes a just-``persist()``-ed state and
-    returns ``count(pred_col)`` — replaces the ``.where(pred).count()``
-    second job per superstep (the frontier-size aggregator); the scan that
-    fills the cache is the same scan that counts."""
+    """ONE action that both materializes a just-persisted or lazily cut
+    state and returns ``count(pred_col)`` — replaces the
+    ``.where(pred).count()`` second job per superstep (the frontier-size
+    aggregator); the scan that writes the blocks is the same scan that
+    counts."""
     row = df.agg(
         F.sum(F.when(F.col(pred_col), 1).otherwise(0)).alias("c")
     ).collect()[0]
@@ -213,32 +217,35 @@ def materialize_count(df: DataFrame, pred_col: str) -> int:
 # restore then pins A's suppressed value forever. Suppression is
 # therefore REFCOUNTED per session-conf: the first suppressor saves the
 # user's value and turns AQE off; only the last one out restores it.
-# Keyed by the session object (cloned foreachBatch sessions have their
-# own SQLConf and suppress independently).
+# Keyed weakly by the session object (cloned foreachBatch sessions have
+# their own SQLConf and suppress independently): a session that dies
+# while suppressed takes its entry with it, so a later session can never
+# inherit a stale depth through a reused ``id()``.
 
-_AQE_LOCK = __import__("threading").Lock()
-_AQE_STATE: dict[int, tuple[int, str]] = {}  # id(session) -> (depth, saved)
+_AQE_LOCK = threading.Lock()
+# session -> (depth, saved value)
+_AQE_STATE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def suppress_aqe(spark) -> None:
     """Turn AQE off for this session, refcounted (pair with restore_aqe)."""
     with _AQE_LOCK:
-        depth, saved = _AQE_STATE.get(id(spark), (0, "true"))
+        depth, saved = _AQE_STATE.get(spark, (0, "true"))
         if depth == 0:
             saved = spark.conf.get("spark.sql.adaptive.enabled", "true")
             spark.conf.set("spark.sql.adaptive.enabled", "false")
-        _AQE_STATE[id(spark)] = (depth + 1, saved)
+        _AQE_STATE[spark] = (depth + 1, saved)
 
 
 def restore_aqe(spark) -> None:
     """Undo one suppress_aqe; restores the saved value at depth zero."""
     with _AQE_LOCK:
-        depth, saved = _AQE_STATE.get(id(spark), (0, "true"))
+        depth, saved = _AQE_STATE.get(spark, (0, "true"))
         if depth <= 1:
-            _AQE_STATE.pop(id(spark), None)
+            _AQE_STATE.pop(spark, None)
             spark.conf.set("spark.sql.adaptive.enabled", saved)
         else:
-            _AQE_STATE[id(spark)] = (depth - 1, saved)
+            _AQE_STATE[spark] = (depth - 1, saved)
 
 
 # --- job-completion-gated checkpoint-block release -----------------------
@@ -260,7 +267,8 @@ def restore_aqe(spark) -> None:
 # workers before checkpoint cleanup).
 
 _PENDING_RELEASES: list[tuple[Any, frozenset, object]] = []
-_RELEASES_LOCK = __import__("threading").Lock()
+_RELEASES_LOCK = threading.Lock()
+_DRAIN_LOCK = threading.Lock()  # one evaluate-and-requeue cycle at a time
 
 
 def _live_work_ids(sc) -> frozenset:
@@ -281,29 +289,30 @@ def drain_releases() -> int:
     """Free every pending handle whose watched jobs/stages have all
     finished; return how many remain pending. Thread-safe: a release can
     be requested from a streaming foreachBatch thread while the main
-    loop drains (the lock stops a concurrent append from being lost
-    when the pending list is swapped)."""
+    loop drains (the list lock stops a concurrent append from being lost
+    when the pending list is swapped), and the drain lock serializes
+    whole evaluate-and-requeue cycles, so a second drain never sees the
+    list empty while the first still holds entries it will requeue."""
     global _PENDING_RELEASES
-    with _RELEASES_LOCK:
-        pending, _PENDING_RELEASES = _PENDING_RELEASES, []
-    if not pending:
-        return 0
-    still: list[tuple[Any, frozenset, object]] = []
-    live_cache: dict[int, frozenset] = {}
-    for sc, watched, handle in pending:
-        key = id(sc)
-        if key not in live_cache:
-            live_cache[key] = _live_work_ids(sc)
-        if watched & live_cache[key]:
-            still.append((sc, watched, handle))
-        else:
-            try:
-                handle.unpersist(False)  # type: ignore[attr-defined]
-            except Exception:  # noqa: BLE001
-                pass
-    with _RELEASES_LOCK:
-        _PENDING_RELEASES.extend(still)
-        return len(_PENDING_RELEASES)
+    with _DRAIN_LOCK:
+        with _RELEASES_LOCK:
+            pending, _PENDING_RELEASES = _PENDING_RELEASES, []
+        still: list[tuple[Any, frozenset, object]] = []
+        live_cache: dict[int, frozenset] = {}
+        for sc, watched, handle in pending:
+            key = id(sc)
+            if key not in live_cache:
+                live_cache[key] = _live_work_ids(sc)
+            if watched & live_cache[key]:
+                still.append((sc, watched, handle))
+            else:
+                try:
+                    handle.unpersist(False)  # type: ignore[attr-defined]
+                except Exception:  # noqa: BLE001
+                    pass
+        with _RELEASES_LOCK:
+            _PENDING_RELEASES.extend(still)
+            return len(_PENDING_RELEASES)
 
 
 def _gated_release(sc, handle) -> None:
@@ -341,100 +350,137 @@ def flush_releases(timeout: float = 30.0) -> int:
 
 def _checkpointed_jrdd(df: DataFrame):
     """Best-effort handle to the java RDD backing a localCheckpoint'ed
-    DataFrame (LogicalRDD.rdd), for explicit release — there is no public
-    unpersist for checkpoint blocks. Returns None if the internals don't
-    match (then the block lives until session end, the pre-existing
-    behavior)."""
+    DataFrame (LogicalRDD.rdd), seen through any projections on top of
+    it, for explicit release — there is no public unpersist for
+    checkpoint blocks. Returns None if the internals don't match (then
+    the block lives until session end, the pre-existing behavior)."""
     try:
-        return df._jdf.queryExecution().analyzed().rdd()  # noqa: SLF001
+        plan = df._jdf.queryExecution().analyzed()  # noqa: SLF001
+        while plan.nodeName() == "Project":
+            plan = plan.child()
+        return plan.rdd()
     except Exception:  # noqa: BLE001
         return None
 
 
-def bare_checkpoint(df: DataFrame) -> tuple[DataFrame, Callable[[], None]]:
-    """Eager localCheckpoint returning a BARE ``LogicalRDD`` wrap of the
-    checkpointed data — stripped of the origin-stats/constraints
-    references ``Dataset.checkpoint`` bakes into its leaf.
+@dataclass
+class Cut:
+    """A lineage-cut frame and the ONE way its checkpoint blocks get
+    freed: :meth:`release`, always through the job/stage gate above
+    (``DataFrame.unpersist`` cannot free them — checkpoint blocks are
+    only reachable via the java handle). Made by :func:`lineage_cut`;
+    :class:`LineageCuts`, :func:`bare_checkpoint` and the superstep
+    loops all hold these."""
 
-    Why it exists (measured, round 4): a checkpoint leaf keeps lazy
-    references to its ORIGIN plan's statistics, and in an iterated loop
-    the origin plan references the previous round's leaf several times —
-    so Catalyst's stats consumers (InjectRuntimeFilter, join-strategy
-    selection, AQE) walk a tree that grows ~branching^depth. In the
-    trussness peel this doubled the per-round planning time every round
-    (1 s -> 100 s within 8 rounds, identical plan text) and is the same
-    accumulation that OOMed a round-3 run inside
-    SizeInBytesOnlyStatsPlanVisitor; reliable ``checkpoint()`` carries
-    the same chain, and a parquet round-trip breaks it only because a
-    file scan has no origin. Rebuilding the leaf with
-    ``internalCreateDataFrame`` over the already-checkpointed internal
-    RDD severs the chain with zero IO: planning measured flat (70 ms)
-    at every depth.
+    df: DataFrame
+    handle: Any = field(repr=False)  # None if the internals don't match
+    # captured at cut time so release() can gate on live work even when
+    # called from a thread where SparkSession.getActiveSession() is None
+    # (fresh py4j threads don't inherit the active-session local)
+    sc: Any = field(repr=False)
 
-    Trades: the bare leaf loses outputPartitioning/ordering metadata
-    (downstream joins may add an exchange the original leaf could have
-    elided) and reports default stats. Use it for loops whose state is
-    re-shuffled anyway; keep plain ``LineageCuts`` where cut-to-cut
-    co-partitioning matters (the pregel superstep state).
+    def release(self) -> None:
+        """Free the blocks once no job/stage live now can still read
+        them (idempotent)."""
+        handle, self.handle = self.handle, None
+        if handle is not None:
+            _gated_release(self.sc, handle)
 
-    Returns ``(bare_df, release)``; ``release()`` frees the checkpoint
-    blocks once nothing downstream reads them.
+
+def lineage_cut(df: DataFrame, eager: bool = True, bare: bool = False) -> Cut:
+    """localCheckpoint ``df`` and return its :class:`Cut`.
+
+    ``eager=False`` defers the write to the first action over
+    ``Cut.df``: a superstep whose one aggregate reads the lazily cut
+    frame writes the checkpoint blocks in that same job, instead of a
+    separate cut job plus its driver gap (measured ~120 ms of the ~430 ms
+    sf0.1 superstep floor).
+
+    ``bare=True`` (eager only) re-wraps the checkpointed data as a BARE
+    ``LogicalRDD`` — stripped of the origin-stats/constraints references
+    ``Dataset.checkpoint`` bakes into its leaf. Why (measured, round 4):
+    a checkpoint leaf keeps lazy references to its ORIGIN plan's
+    statistics, and in an iterated loop the origin plan references the
+    previous round's leaf several times — so Catalyst's stats consumers
+    (InjectRuntimeFilter, join-strategy selection, AQE) walk a tree that
+    grows ~branching^depth. In the trussness peel this doubled the
+    per-round planning time every round (1 s -> 100 s within 8 rounds,
+    identical plan text) and is the same accumulation that OOMed a
+    round-3 run inside SizeInBytesOnlyStatsPlanVisitor; reliable
+    ``checkpoint()`` carries the same chain, and a parquet round-trip
+    breaks it only because a file scan has no origin. Rebuilding the leaf
+    with ``internalCreateDataFrame`` over the already-checkpointed
+    internal RDD severs the chain with zero IO: planning measured flat
+    (70 ms) at every depth. Trades: the bare leaf loses
+    outputPartitioning/ordering metadata (downstream joins may add an
+    exchange the original leaf could have elided) and reports default
+    stats — use it for loops whose state is re-shuffled anyway, not where
+    cut-to-cut co-partitioning matters (the pregel superstep state).
     """
     spark = df.sparkSession
-    c = df.localCheckpoint(eager=True)
-    handle = _checkpointed_jrdd(c)
-    jdf = spark._jsparkSession.internalCreateDataFrame(  # noqa: SLF001
-        c._jdf.queryExecution().toRdd(), c._jdf.schema(), False  # noqa: SLF001
-    )
-    bare = DataFrame(jdf, spark)
+    out = df.localCheckpoint(eager=eager or bare)
+    handle = _checkpointed_jrdd(out)
+    if bare:
+        out = DataFrame(
+            spark._jsparkSession.internalCreateDataFrame(  # noqa: SLF001
+                out._jdf.queryExecution().toRdd(), out._jdf.schema(), False  # noqa: SLF001
+            ),
+            spark,
+        )
+    return Cut(out, handle, spark.sparkContext)
 
-    sc = spark.sparkContext
 
-    def release() -> None:
-        _gated_release(sc, handle)
+def _adopt_cut(df: DataFrame, held: Cut | None) -> Cut | None:
+    """``df`` as a Cut if it already IS a materialized checkpoint (or a
+    projection of one) — a step's own lazy cut that its action wrote —
+    other than ``held``, the cut the loop already owns; else None."""
+    handle = _checkpointed_jrdd(df)
+    try:
+        if handle is None or not handle.isCheckpointed():
+            return None
+        if held is not None and held.handle is not None and handle.id() == held.handle.id():
+            return None
+    except Exception:  # noqa: BLE001
+        return None
+    return Cut(df, handle, df.sparkSession.sparkContext)
 
+
+def bare_checkpoint(df: DataFrame) -> tuple[DataFrame, Callable[[], None]]:
+    """Eager bare :func:`lineage_cut` (see there for why the leaf is
+    bare). Returns ``(bare_df, release)``; ``release()`` frees the
+    checkpoint blocks once nothing downstream reads them."""
+    c = lineage_cut(df, bare=True)
     # expose the checkpointed java-RDD handle for tests/diagnostics that
     # need the concrete rdd id (e.g. asserting release() freed exactly
     # these blocks without assuming the session-wide store is empty)
-    bare._bare_checkpoint_handle = handle  # type: ignore[attr-defined]
-    return bare, release
+    c.df._bare_checkpoint_handle = c.handle  # type: ignore[attr-defined]
+    return c.df, c.release
 
 
 class LineageCuts:
-    """Per-slot localCheckpoint bookkeeping with explicit block release.
-
-    The engine-level mechanism behind every iterative driver loop
-    (scc/mis/wcc-star): ``cut(df, slot)`` eagerly checkpoints ``df`` and
-    frees the slot's previous blocks (``DataFrame.unpersist`` cannot --
-    checkpoint RDD blocks are only reachable via the java handle).
-    """
+    """Per-slot :class:`Cut` bookkeeping for iterative driver loops
+    (scc/mis/wcc-star/deadlock): ``cut(df, slot)`` eagerly checkpoints
+    ``df`` and frees the slot's previous blocks."""
 
     def __init__(self) -> None:
-        # slot -> (SparkContext, java-RDD handle): the sc is captured at
-        # cut time so release() can gate on live work even when called
-        # from a thread where SparkSession.getActiveSession() is None
-        # (fresh py4j threads don't inherit the active-session local)
-        self._handles: dict[str, tuple[Any, object]] = {}
+        self._cuts: dict[str, Cut] = {}
 
     def cut(self, df: DataFrame, slot: str) -> DataFrame:
-        out = df.localCheckpoint(eager=True)
-        sc = df.sparkSession.sparkContext
-        prev = self._handles.get(slot)
-        if prev is not None:
-            _gated_release(*prev)
-        self._handles[slot] = (sc, _checkpointed_jrdd(out))
-        return out
+        new = lineage_cut(df)
+        self.release(slot)
+        self._cuts[slot] = new
+        return new.df
 
     def forget(self, slot: str) -> None:
         """Stop tracking (the cut's blocks outlive this run — e.g. the
         result) without releasing them."""
-        self._handles.pop(slot, None)
+        self._cuts.pop(slot, None)
 
     def release(self, slot: str) -> None:
         """Free a slot's blocks once no live job/stage can read them."""
-        prev = self._handles.pop(slot, None)
-        if prev is not None:
-            _gated_release(*prev)
+        old = self._cuts.pop(slot, None)
+        if old is not None:
+            old.release()
 
 
 @dataclass
@@ -460,16 +506,24 @@ class WorkerHooks:
 
 @dataclass
 class PregelRun:
-    """Outcome of a superstep loop."""
+    """Outcome of a superstep loop. ``cut`` is the lineage cut behind
+    ``vertices`` (None when the state is a persisted snapshot reload or
+    the input itself); its blocks are the caller's, freed by
+    :meth:`release` once nothing reads ``vertices`` any more."""
 
     vertices: DataFrame
     supersteps: int
     converged: bool
     history: list[dict[str, Any]] = field(default_factory=list)
+    cut: Cut | None = field(default=None, repr=False)
 
     @property
     def last_stats(self) -> dict[str, Any]:
         return self.history[-1] if self.history else {}
+
+    def release(self) -> None:
+        if self.cut is not None:
+            self.cut.release()
 
 
 def run_supersteps(
@@ -481,21 +535,10 @@ def run_supersteps(
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 5,
     resume: bool = False,
-    lineage_cut_interval: int = 1,
     hooks: WorkerHooks | None = None,
     verbose: bool = False,
-    step_precut: bool = False,
 ) -> PregelRun:
     """Drive the BSP loop.
-
-    ``step_precut=True`` declares that ``step`` returns a LAZILY
-    localCheckpoint'ed frame whose own convergence action materializes
-    the checkpoint blocks (``df.localCheckpoint(eager=False)`` issued
-    BEFORE the step's aggregate). The loop then skips both its persist
-    and its separate eager-cut job — one Spark job per superstep instead
-    of two — and keeps only the block-release bookkeeping. Measured at
-    sf0.1: the dedicated localCheckpoint job plus its driver gap was
-    ~120 ms of the ~430 ms superstep floor.
 
     ``step(vertices, superstep)`` returns ``(new_vertices, stats)`` and must
     have issued exactly the actions it needs (typically ONE ``agg`` that
@@ -506,12 +549,17 @@ def run_supersteps(
     lineage metrics are written every ``checkpoint_interval`` supersteps;
     with ``resume=True`` the loop continues from the newest valid snapshot.
 
-    Lineage-cut invalidation: each cut explicitly releases the PREVIOUS
-    cut's localCheckpoint blocks, so a ``step``/``halt`` closure must not
-    retain and later re-execute a DataFrame derived from an earlier
-    superstep — it would fail with "checkpoint block not found". Derive
-    everything you need within the superstep (or from ``PregelRun.
-    vertices`` after the loop).
+    Lineage cut, once per superstep: if ``new_vertices`` already IS a
+    materialized checkpoint (or a projection of one) — the step built it
+    with ``lineage_cut(df, eager=False)`` and its own aggregate wrote the
+    blocks — the loop keeps it, and the superstep costs one Spark job.
+    Otherwise the loop cuts it eagerly (a second job). Either way the loop
+    then owns that cut and frees it once the next superstep supersedes
+    it, so a step must not return a checkpoint it does not own, and a
+    ``step``/``halt`` closure must not retain and later re-execute a
+    DataFrame derived from an earlier superstep — it would fail with
+    "checkpoint block not found". Derive everything you need within the
+    superstep (or from ``PregelRun.vertices`` after the loop).
 
     Fault tolerance at cluster scale: ``localCheckpoint`` blocks are
     executor-local and NOT fault-tolerant — between reliable snapshots,
@@ -524,14 +572,14 @@ def run_supersteps(
     the per-superstep local cut only bounds plan growth. local[*] runs
     can ignore this (one JVM = no partial loss).
 
-    Concurrency: the loop toggles the session-wide
-    ``spark.sql.adaptive.enabled`` conf for its duration (see the inline
-    rationale below) and assumes a SINGLE-THREADED driver — queries run
-    concurrently on the same SparkSession from other threads would
-    silently lose AQE's skew handling while a loop is active, and two
-    interleaved loops could restore a stale value. Run concurrent
-    driver-side work on a separate ``spark.newSession()`` clone (its conf
-    is independent) if that pattern is ever needed.
+    Concurrency: the loop turns the session-wide
+    ``spark.sql.adaptive.enabled`` conf off for its duration (see the
+    inline rationale below). Suppression is refcounted per session, so
+    overlapping loops on one session keep AQE off until the last one
+    exits, which restores the user's value. Queries run on the same
+    SparkSession from other threads meanwhile lose AQE's skew handling;
+    run such driver-side work on a ``spark.newSession()`` clone (its conf
+    is independent) if that matters.
     """
     ckpt = (
         CheckpointManager(spark, checkpoint_dir, checkpoint_interval)
@@ -547,8 +595,8 @@ def run_supersteps(
                 print(f"[pregel] resuming from checkpoint superstep={superstep}")
 
     current = vertices.persist()
-    start_partitions = current.rdd.getNumPartitions()
-    est_partitions = start_partitions  # maintained from each cut's java RDD
+    held: Cut | None = None  # the cut behind `current`, freed once superseded
+    start_partitions = max(current.rdd.getNumPartitions(), 1)
     # AQE off for the loop: superstep plans are fixed-shape (explicit
     # shuffle_hash hints, explicit partition counts, salting for skew),
     # so adaptive re-planning adds only its latency — AQE materializes
@@ -559,7 +607,6 @@ def run_supersteps(
     history: list[dict[str, Any]] = []
     converged = False
     last_saved = superstep if (resume and ckpt is not None) else None
-    prev_cut_jrdd = None  # java RDD behind the previous lineage cut
     suppress_aqe(spark)  # refcounted: safe under overlapping loops
     try:
         # inside the try so a raising hook cannot leak AQE=false into the
@@ -571,91 +618,52 @@ def run_supersteps(
             if hooks is not None and hooks.pre_superstep is not None:
                 hooks.pre_superstep(current, superstep)
             new_vertices, stats = step(current, superstep)
-            if not step_precut:
-                new_vertices = new_vertices.persist()
-            if not stats:  # ensure materialization even if step ran no action
-                stats = {"rows": new_vertices.count()}
+            # bound Catalyst analysis time across iterations (risk register:
+            # iterative-plan blowup; Giraph analog: checkpoint frequency).
+            # Measured: without the cut, analysis grows ~+3s/superstep on a
+            # 16M-edge graph — hence every superstep.
+            cut = _adopt_cut(new_vertices, held) or lineage_cut(new_vertices)
+            if not stats:
+                stats = {"rows": cut.df.count()}
             stats = dict(stats)
             stats["superstep"] = superstep
             stats["seconds"] = time.time() - t0
             if hooks is not None and hooks.post_superstep is not None:
-                hooks.post_superstep(new_vertices, superstep, stats)
+                hooks.post_superstep(cut.df, superstep, stats)
             history.append(stats)
             if verbose:
                 print(f"[pregel] superstep={superstep} {stats}")
 
             superstep += 1
-            current.unpersist()
-            current = new_vertices
+            current.unpersist()  # the persisted input or snapshot reload
+            # the new state is materialized, so nothing reads the previous
+            # cut any more (localCheckpoint blocks are not freed by
+            # DataFrame.unpersist; a long run would otherwise hold every
+            # superstep's state)
+            if held is not None:
+                held.release()
+            held, current = cut, cut.df
 
             if ckpt is not None and ckpt.should_save(superstep):
-                reloaded = ckpt.save(current, superstep, stats)
+                # the reliable snapshot replaces the cut as the state
+                current = ckpt.save(current, superstep, stats).persist()
                 last_saved = superstep
-                if step_precut:
-                    # the reliable snapshot replaces the precut state:
-                    # release this superstep's (and the pending previous)
-                    # checkpoint blocks now — nothing reads them again
-                    _gated_release(spark.sparkContext, _checkpointed_jrdd(current))
-                    _gated_release(spark.sparkContext, prev_cut_jrdd)
-                    prev_cut_jrdd = None
-                current.unpersist()
-                current = reloaded.persist()
-            elif step_precut:
-                # the step's action already materialized this superstep's
-                # checkpoint blocks — just swap the release handles
-                _gated_release(spark.sparkContext, prev_cut_jrdd)
-                prev_cut_jrdd = _checkpointed_jrdd(current)
-                if prev_cut_jrdd is not None:
-                    try:
-                        est_partitions = int(prev_cut_jrdd.getNumPartitions())
-                    except Exception:  # noqa: BLE001
-                        est_partitions = start_partitions
-                # same defensive width bound as the eager-cut branch below:
-                # a step that unions frames compounds partition width every
-                # superstep until the cut materializes tens of thousands of
-                # tiny blocks. The coalesce is narrow and lands on the INPUT
-                # of the next step, so its cut materializes at the bounded
-                # width (one superstep of lag, 8x headroom — same contract
-                # as the est_partitions probe documented below)
-                if est_partitions > 8 * max(start_partitions, 1):
-                    current = current.coalesce(start_partitions)
-                    est_partitions = start_partitions
-            elif lineage_cut_interval and superstep % lineage_cut_interval == 0:
-                # bound Catalyst analysis time across iterations (risk register:
-                # iterative-plan blowup; Giraph analog: checkpoint frequency).
-                # Measured: without the cut, analysis grows ~+3s/superstep on a
-                # 16M-edge graph, while the cut itself reuses the cached
-                # partitions and costs well under a second — hence every step.
+                held.release()
+                held = None
+            else:
                 # defensive width bound: a step that unions frames (narrow
                 # union sums partition counts) would otherwise compound the
                 # width superstep over superstep until the cut materializes
-                # tens of thousands of tiny blocks; coalesce is narrow (no
-                # shuffle) and a no-op while the width stays sane
-                persisted = current  # keep a handle: unpersist must target the
-                # CACHED frame, not a coalesce built on top of it (coalesce is
-                # a different plan — unpersisting it is a no-op and leaks)
-                # width probe: use the PREVIOUS cut's width (a plain java-RDD
-                # call) instead of converting `current` to a python RDD every
-                # superstep (DataFrame.rdd re-analyzes the plan and builds a
-                # pickle pipeline — a measurable slice of the per-superstep
-                # driver floor). One step of lag is safe: the bound is
-                # defensive with 8x headroom, so a union-growing step coalesces
-                # at the NEXT cut instead of this one.
-                if est_partitions > 8 * max(start_partitions, 1):
+                # tens of thousands of tiny blocks. The coalesce is narrow
+                # and lands on the INPUT of the next step, so its cut
+                # materializes at the bounded width (8x headroom; a no-op
+                # while the width stays sane)
+                try:
+                    width = int(held.handle.getNumPartitions())
+                except Exception:  # noqa: BLE001
+                    width = start_partitions
+                if width > 8 * start_partitions:
                     current = current.coalesce(start_partitions)
-                cut = current.localCheckpoint(eager=True)
-                persisted.unpersist()
-                current = cut
-                # release the PREVIOUS cut's checkpointed RDD: unlike persist(),
-                # localCheckpoint blocks are not freed by DataFrame.unpersist,
-                # so a long run would otherwise hold every superstep's state
-                _gated_release(spark.sparkContext, prev_cut_jrdd)
-                prev_cut_jrdd = _checkpointed_jrdd(cut)
-                if prev_cut_jrdd is not None:
-                    try:
-                        est_partitions = int(prev_cut_jrdd.getNumPartitions())
-                    except Exception:  # noqa: BLE001
-                        est_partitions = start_partitions
 
             if halt is not None and halt(stats, superstep):
                 converged = True
@@ -674,5 +682,76 @@ def run_supersteps(
         # inline; this catches ones deferred past a straggler)
         drain_releases()
     return PregelRun(
-        vertices=current, supersteps=superstep, converged=converged, history=history
+        vertices=current,
+        supersteps=superstep,
+        converged=converged,
+        history=history,
+        cut=held,
     )
+
+
+def sql_supersteps(
+    spark: SparkSession,
+    state: DataFrame,
+    frames: dict[str, DataFrame | Callable[[], DataFrame]],
+    step_sql: Callable[[Callable[[str], str], int], str],
+    agg: str,
+    stats: Callable[[Any], dict[str, Any]],
+    **loop: Any,
+) -> PregelRun:
+    """:func:`run_supersteps` where each superstep is ONE ``spark.sql``
+    text plus ONE aggregate job.
+
+    Shipping the whole step as a SQL string costs one py4j call; building
+    it from DataFrame-API calls costs one round trip per Column/DataFrame
+    builder (measured ~117 ms of the ~430 ms sf0.1 superstep floor; 442 ->
+    335 ms/superstep for PageRank, results identical to FP reorder noise).
+
+    - ``frames``: the run's static tables (the cached edge frames), by
+      name. Each becomes a uniquely named temp view the first time the SQL
+      asks for it; a zero-arg callable is built only then (e.g. a second
+      partitioning of the edges that only some supersteps need). All are
+      unpersisted and their views dropped when the run ends.
+    - ``step_sql(view, superstep)`` returns the SQL text of the next state;
+      ``view(name)`` is the temp-view name of ``frames[name]``, and
+      ``view("state")`` that of the current state.
+    - ``agg`` is the select list of the superstep's one aggregate over the
+      new state: that job also writes the state's lazy lineage cut.
+    - ``stats(row)`` maps the aggregate row to the superstep's stats.
+    - ``loop`` (``max_supersteps``, ``halt``, checkpointing, ...) is passed
+      on to :func:`run_supersteps`.
+
+    The views and the SQL resolve in ``spark``, which must own the frames:
+    inside foreachBatch they belong to a CLONED session whose temp-view
+    catalog is isolated from the outer session's.
+    """
+    uid = uuid.uuid4().hex[:8]
+    names = {"state": f"state_{uid}"}
+    new_view = f"new_{uid}"
+    frames = dict(frames)  # built callables are replaced by their frames
+
+    def view(name: str) -> str:
+        if name not in names:
+            if callable(frames[name]):
+                frames[name] = frames[name]()
+            names[name] = f"{name}_{uid}"
+            frames[name].createOrReplaceTempView(names[name])
+        return names[name]
+
+    def step(vertices: DataFrame, superstep: int) -> tuple[DataFrame, dict[str, Any]]:
+        vertices.createOrReplaceTempView(names["state"])
+        new = lineage_cut(spark.sql(step_sql(view, superstep)), eager=False).df
+        new.createOrReplaceTempView(new_view)
+        return new, stats(spark.sql(f"SELECT {agg} FROM {new_view}").collect()[0])
+
+    try:
+        return run_supersteps(spark, state, step, **loop)
+    finally:
+        for name in [*names.values(), new_view]:
+            try:
+                spark.catalog.dropTempView(name)
+            except Exception:  # noqa: BLE001 — view may never have been created
+                pass
+        for df in frames.values():
+            if isinstance(df, DataFrame):
+                df.unpersist()

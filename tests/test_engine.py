@@ -438,6 +438,35 @@ def _pool_cases(pregel, FakeSC, FakeHandle):
     pregel._gated_release(BrokenSC(), h4)
     assert h4.freed  # unknown liveness -> free now (pre-gating behavior)
 
+    # two threads drain a pool holding a still-watched entry: the first is
+    # mid-evaluation (slow tracker) when the second starts, and the drain
+    # lock makes the second wait for the requeue — both see 1 pending
+    import threading
+    import time
+
+    class SlowSC(FakeSC):
+        def statusTracker(self):
+            time.sleep(0.2)
+            return super().statusTracker()
+
+    sc3 = SlowSC(jobs={5})
+    h5 = FakeHandle()
+    pregel._gated_release(sc3, h5)
+    seen: list[int] = []
+    drains = [
+        threading.Thread(target=lambda: seen.append(pregel.drain_releases()))
+        for _ in range(2)
+    ]
+    drains[0].start()
+    time.sleep(0.05)
+    drains[1].start()
+    for t in drains:
+        t.join(timeout=10)
+        assert not t.is_alive()
+    assert seen == [1, 1] and not h5.freed
+    sc3.jobs = set()
+    assert pregel.drain_releases() == 0 and h5.freed
+
 
 def test_daemon_warm_wiring(spark):
     """The local-mode session must point the worker daemon at the

@@ -1,10 +1,10 @@
 """A/B the PageRank per-superstep driver floor at bench conditions.
 
 Replicates bench.py's exact session + data (synth sf0.1 corpus, 32
-cores, suggest_num_partitions), then times pagerank-to-1e-6 repeatedly
-repeatedly. The lineage-cut-interval knob A/B is retired: pagerank runs
-step_precut (one cut per superstep by construction), so the only axis
-left here is repetition count. Prints one JSON line per run.
+cores, suggest_num_partitions), then times pagerank-to-1e-6 repeatedly.
+Each PageRank superstep writes its own lazy lineage cut in its one
+aggregate job, so there is no cut-frequency axis: the only axis left
+here is repetition count. Prints one JSON line per run.
 
 Usage: python tools/diag_pr_floor.py [reps]
 """
